@@ -76,4 +76,17 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Release every cached thing the session holds: Catalyst's cache
+    * manager, then every RDD still registered as persistent — which
+    * includes the per-round `localCheckpoint` RDDs of
+    * [[graft.functions.ConnectedComponents]] that `clearCache` does not
+    * know about. Timing harnesses call it before every rep so no rep
+    * reads what an earlier one cached.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
 }

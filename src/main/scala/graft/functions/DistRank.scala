@@ -28,7 +28,7 @@ import org.apache.spark.storage.StorageLevel
   * unique-key tiebreak) — then (range slice, local order) reproduces the
   * exact global order and every rank value, so results are bit-identical
   * to the single-partition form (DistRankSpec pins this against Spark's
-  * own `row_number`/`ntile`; `tools.RankScaleProbe` measures the flat
+  * own `row_number`/`ntile`; `tools.ScaleLaw rank-ntile` measures the flat
   * per-partition cost as the corpus scales).
   *
   * The range-shuffled projection is persisted: the offsets pass and the

@@ -53,7 +53,8 @@ import org.apache.spark.sql.types._
   *
   * Scale: candidate fan-in per probe row is the 2-bucket event density
   * (the band width), not the partner side's cardinality — the measured
-  * AsofScaleProbe law, now engine-owned for any naive band spelling.
+  * `asof-band` law of [[graft.tools.ScaleLaw]], now engine-owned for any
+  * naive band spelling.
   *
   * Non-inner variants (round 8, [[RewriteSupport]] doctrine): LEFT
   * SEMI/ANTI gain a left row id and collapse the 2-bucket explode back

@@ -39,17 +39,18 @@ object ResolutionPack extends QueryPack {
 
   /** [[charGrams]] with a COLUMN gram length — the blocking key must be
     * sizable from data (see q251's auto-ℓ). */
-  private def charGramsL(nm: Column, l: Column): Column =
+  private[graft] def charGramsL(nm: Column, l: Column): Column =
     when(length(nm) < l, array(nm))
       .otherwise(array_distinct(transform(
         sequence(lit(1), length(nm) - (l - lit(1))), i => nm.substr(i, l))))
 
   /** Blocking gram length from registry size: |Σ|^ℓ ≫ n, the
-    * ErScaleProbe law (~10-char effective alphabet on id-bearing names:
-    * 10³ keys carry ≲30 k records at tiny blocks, 10⁴ ≲100 k, then 5).
+    * `ScaleLaw er-blocking` law (~10-char effective alphabet on
+    * id-bearing names: 10³ keys carry ≲30 k records at tiny blocks,
+    * 10⁴ ≲100 k, then 5).
     * Shared by q251 (which sizes n from the stats-only base count ×
     * the fixed 5/4 dup expansion — a size class, not an exact census)
-    * and the probe's auto-ℓ arm (which uses the actual registry count —
+    * and the case's auto arm (which uses the actual registry count —
     * same law, same thresholds). */
   private[graft] def blockLenOf(n: Long): Int =
     if (n > 100000L) 5 else if (n > 30000L) 4 else 3
@@ -74,7 +75,7 @@ object ResolutionPack extends QueryPack {
     *     blowup (the q63 lesson). The BLOCKING gram length is AUTO-SIZED
     *     from the registry (r6): [[blockLenOf]] picks ℓ ∈ {3,4,5} so the
     *     key space outgrows the corpus (|Σ|^ℓ ≫ n, the ER analogue of
-    *     SimHash width ~2·log₂ n) — [[graft.tools.ErScaleProbe]] measures
+    *     SimHash width ~2·log₂ n) — `ScaleLaw er-blocking` measures
     *     fixed 3-grams going ×4 per corpus doubling (digit-gram space
     *     saturates) where 5-grams hold ×~2 with identical 100% planted
     *     recall, and its auto-ℓ arm tracks the good curve at every k. The

@@ -7,8 +7,8 @@ import graft.Sessions
 /** k×-inflate the sf0.1 testdata into a local sf1 analog for the
   * full-gate STRESS sweep (VERDICT r9 #2: nothing has run the whole
   * query surface above sf0.1). Each copy is NAMESPACE-SHIFTED so true
-  * result cardinalities grow ~k× rather than k² (the probes' tagging
-  * discipline, applied per table):
+  * result cardinalities grow ~k× rather than k² (the tagging discipline
+  * of the ScaleLaw corpora, applied per table):
   *
   *   - every entity key shifts by copy·10⁸ CONSISTENTLY across tables
   *     (custkey in customer AND orders, orderkey/partkey/suppkey in

@@ -1,7 +1,7 @@
 package graft.tools
 
 /** Signature-width sizing runbook — the measured width law
-  * (BASELINE.md: q63/q277 SimHash ladders, the SrpJoinProbe 24-vs-48-bit
+  * (BASELINE.md: q63/q277 SimHash ladders, the srp-cosine 24-vs-48-bit
   * table) turned into a calculator, so the "scale `srpjoin.bits` with
   * the corpus" remedy is a one-liner instead of a scaladoc hunt.
   *

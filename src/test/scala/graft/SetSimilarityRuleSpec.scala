@@ -723,7 +723,7 @@ class SetSimilarityRuleSpec extends SparkSpecBase {
     // "aa" is the value-order minimum of EVERY set — the hot-bucket
     // regime; demoting it must flip the probe key to the rarest
     // element without changing any verdict (the key may be ANY
-    // deterministic element of distinct(sub) — ContainSkewProbe
+    // deterministic element of distinct(sub) — ScaleLaw `containment-skew`
     // measures the law, this pins the mechanics)
     val xy = Seq((1L, "aa p"), (2L, "aa p q"), (3L, "aa r z"),
       (4L, "aa z"), (5L, "aa q"), (6L, "aa p q r z"))

@@ -142,7 +142,7 @@ class SketchSpec extends SparkSpecBase {
   test("q284 per-column HLL profile: every estimate lands in its regime's band") {
     // m = 64 registers → HLL standard error 1.04/√64 ≈ 13%: ~2.7σ band
     // everywhere (the transition zone ndv ≈ 2.5m is the worst case —
-    // linear counting's variance peaks there; NdvSketchProbe measures
+    // linear counting's variance peaks there; ScaleLaw `ndv-sketch` measures
     // the law across 10³–4·10⁶). Deep linear-counting (ndv ≤ m, the
     // low-cardinality enum columns) is far tighter.
     val rows = run("q284_profile_hll_ndv").collect()
